@@ -15,7 +15,7 @@ SURVEY.md §4 P2).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -98,15 +98,3 @@ class DedupConfig:
 #: The one config used everywhere unless a test overrides it.
 DEFAULT_CONFIG = DedupConfig()
 
-
-@dataclass(frozen=True)
-class PipelineConfig:
-    """Stage-orchestration knobs (SURVEY.md §7 M7)."""
-
-    out_dir: str = "/tmp/finddup_spark_out"
-    cc_max_iters: int = 50                # hash-to-min bound; diameter is tiny
-    cc_checkpoint_every: int = 3          # localCheckpoint cadence
-    shuffle_partitions: int | None = None # None → leave session value
-    stages: tuple[str, ...] = field(
-        default=("signatures", "bands", "edges", "clusters", "rollup", "report")
-    )

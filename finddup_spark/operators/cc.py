@@ -1,311 +1,176 @@
-"""Iterative connected-components cluster resolution (SURVEY.md §7 M5).
+"""Connected-components cluster resolution (SURVEY.md §7 M5).
 
 The reference assigns one shared id per dup group by insertion order
 (``create_file_ids``, ``finddup.py:1007-1047``); with fuzzy edges the dup
 relation is no longer transitive-by-construction, so clusters are the
-connected components of the verified-edge graph. Min-label propagation
-(hash-to-min): every vertex repeatedly adopts the minimum label in its
-neighborhood; converges in O(graph diameter) rounds — near-dup cluster
-diameters are tiny. ``localCheckpoint`` every few rounds truncates plan
-lineage (SURVEY.md §4 custom-(b)); convergence is detected with a
-``changed == 0`` aggregate. For pathological web-scale components
-(diameter ~ log n after star ops), swap in alternating large-star/
-small-star (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14 — public algorithm); the driver loop is identical.
+connected components of the verified-edge graph, each labelled by its
+minimum id.
+
+One algorithm at every scale: the numpy union-find kernel
+:func:`union_find`. A graph of at most ``driver_threshold`` edges is
+collected and solved by the kernel on the driver. A larger graph is
+contracted in rounds, after BTS (load-balanced distributed union-find,
+ICDE 2024): hash-partition the canonical edges into P partitions, run
+the kernel in every partition, and join each vertex's smallest local
+root to its other local roots. That star set is the contracted edge set
+of the next round, whose components are those of the input. P starts at
+the session's shuffle-partition count and halves every round; the P=1
+round is a complete union-find, so at most ⌈log₂P⌉+1 rounds run before
+the edge set fits the driver. Adaptive execution may merge the first
+round's partitions (a small edge set lands in one, which completes the
+union-find at once); later rounds keep their edges in the partition of
+the vertex that produced them, coalesced to at most P. Labels compose
+back through each round's vertex → smallest-local-root map.
 """
 
 from __future__ import annotations
 
+from itertools import chain
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def union_find(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``(ids, roots)``: every id in ``src``/``dst`` (sorted, unique) and
+    the minimum id of its connected component.
+
+    Ids are compacted with ``np.unique``, which keeps their order, so the
+    smallest compact id of a component is its smallest id. Every round
+    hooks the larger root of each edge whose endpoints still have
+    different roots onto the smaller root, then pointer-jumps until every
+    parent is a root. A hook only ever points down, so no cycle can form
+    and a component's minimum is never hooked: it ends as the root.
+    """
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    a, b = inv[: len(src)], inv[len(src):]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[a], parent[b]
+        live = ra != rb
+        if not live.any():
+            return ids, ids[parent]
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        # repeated indices: any one of the smaller roots wins — each is in
+        # the same component and smaller, which is all correctness needs
+        parent[np.maximum(ra, rb)] = np.minimum(ra, rb)
+        while True:
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+
+
+def _partition_roots(batches):
+    """mapInPandas body: (x, r) = every vertex of this partition's edges
+    and its root under this partition's edges alone."""
+    parts = [b for b in batches if len(b)]
+    if parts:
+        e = pd.concat(parts)
+        ids, roots = union_find(e.u.to_numpy(), e.v.to_numpy())
+        yield pd.DataFrame({"x": ids, "r": roots})
+
+
+def _contract(edges: DataFrame, driver_threshold: int) -> tuple[list, list[DataFrame]]:
+    """Contraction rounds (module docstring) until at most
+    ``driver_threshold`` edges remain: ``(rows, maps)`` = those edges,
+    collected, and per round the checkpointed (x, m = smallest local root
+    of x, rs = all local roots of x). Unpersists the cached ``edges``
+    once the first round's checkpoint holds what they fed."""
+    parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    e = edges.select(
+        F.least("src", "dst").cast("long").alias("u"),
+        F.greatest("src", "dst").cast("long").alias("v"),
+    ).repartition("u", "v")
+    maps = []
+    while True:
+        t = (
+            e.mapInPandas(_partition_roots, "x long, r long")
+            .groupBy("x")
+            .agg(F.min("r").alias("m"), F.collect_set("r").alias("rs"))
+            .localCheckpoint(eager=True)
+        )
+        edges.unpersist()  # a no-op after the first round
+        maps.append(t)
+        parts = max(1, parts // 2)
+        e = t.select(
+            F.col("m").alias("u"), F.explode(F.array_remove("rs", F.col("m"))).alias("v")
+        ).coalesce(parts)
+        rows = e.limit(driver_threshold + 1).collect()
+        if len(rows) <= driver_threshold:
+            return rows, maps
 
 
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
-    max_iters: int = 50,
-    checkpoint_every: int = 3,
     id_col: str = "doc_id",
     driver_threshold: int = 2_000_000,
-    algorithm: str = "star",
 ) -> DataFrame:
     """clusters(doc_id, cluster_id) — cluster_id = min doc_id in component.
 
     ``edges``: (src, dst). ``vertices``: optional (doc_id) universe; docs
     with no edges come out as singleton clusters (cluster_id = doc_id).
 
-    Cardinality-dependent strategy switch (the reference's P4 principle,
-    ``finddup.py:434-467``, generalized): a verified-edge graph below
-    ``driver_threshold`` edges is collected and solved with union-find on
-    the driver in milliseconds — near-dup edge sets are tiny relative to
-    the corpus even at 100 TB (edges ≈ dup pairs, not pages). Above the
-    threshold the distributed path runs: ``algorithm="star"`` (default)
-    is alternating large-star/small-star, O(log n) rounds regardless of
-    component diameter; ``algorithm="minlabel"`` is plain min-label
-    propagation, O(diameter) rounds — fine for tiny near-dup clusters,
-    pathological for chain-shaped mirror graphs.
+    Cardinality-dependent finish (the reference's P4 principle,
+    ``finddup.py:434-467``, generalized): near-dup edge sets are tiny
+    relative to the corpus even at 100 TB (edges ≈ dup pairs, not
+    pages), so a graph of at most ``driver_threshold`` edges is solved
+    by :func:`union_find` on the driver. A larger one is contracted by
+    partition-local union-find rounds (module docstring) until the
+    contracted edge set fits under ``driver_threshold``, then finished
+    the same way on the driver.
     """
+    if driver_threshold < 0:
+        # the rounds stop only once at most driver_threshold edges remain
+        raise ValueError(f"driver_threshold must be >= 0, got {driver_threshold}")
+    spark = edges.sparkSession
     edges = edges.persist()
     # limit-guarded collect: ONE action decides the strategy AND feeds
-    # the driver path (the previous count-then-collect pair cost an extra
-    # full action per dedup call). At most driver_threshold + 1 rows ever
-    # reach the driver; overflow means the distributed path runs against
-    # the (partially) persisted edges.
-    probe = edges.select("src", "dst").limit(driver_threshold + 1).collect()
-    if len(probe) <= driver_threshold:
-        out = _driver_cc(edges, vertices, id_col, rows=probe)
-        edges.unpersist()  # collected — the cache has served its purpose
-        return out
-    if algorithm == "star":
-        out = connected_components_star(
-            edges, vertices, max_iters=max_iters,
-            checkpoint_every=checkpoint_every, id_col=id_col,
-        )
+    # the driver path (a count-then-collect pair would cost an extra full
+    # action per dedup call). At most driver_threshold + 1 rows ever reach
+    # the driver; overflow means the contraction rounds run against the
+    # (partially) persisted edges.
+    rows = edges.select("src", "dst").limit(driver_threshold + 1).collect()
+    if not rows and vertices is not None:
         edges.unpersist()
-        return out
-    sym = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-    )
-    touched = sym.select(F.col("a").alias(id_col)).distinct()
-    labels = touched.withColumn("label", F.col(id_col))
+        # no edges at all: every vertex is a singleton — what the anti-join
+        # below yields, minus the plan nodes it would burn on a no-dup corpus
+        return vertices.select(
+            F.col(id_col).cast("long").alias(id_col),
+            F.col(id_col).cast("long").alias("cluster_id"),
+        )
 
-    for it in range(max_iters):
-        nbr_min = (
-            sym.join(labels.withColumnRenamed(id_col, "b"), "b")
-            .groupBy("a")
-            .agg(F.min("label").alias("nbr_min"))
-            .withColumnRenamed("a", id_col)
-        )
-        new_labels = (
-            labels.join(nbr_min, id_col, "left")
-            .select(
-                id_col,
-                F.least(F.col("label"), F.coalesce("nbr_min", "label")).alias("label"),
-                (F.col("label") != F.least(F.col("label"), F.coalesce("nbr_min", "label"))).alias("chg"),
-            )
-        )
-        if (it + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        changed = new_labels.agg(F.sum(F.col("chg").cast("int"))).collect()[0][0] or 0
-        labels = new_labels.select(id_col, "label")
-        if changed == 0:
-            break
+    if len(rows) > driver_threshold:
+        rows, maps = _contract(edges, driver_threshold)
     else:
-        raise RuntimeError(
-            f"min-label CC did not converge in {max_iters} iterations "
-            f"({changed} labels still changing) — raise max_iters or use "
-            "algorithm='star' (O(log n) rounds)"
-        )
+        maps = []
+        edges.unpersist()  # collected — the cache has served its purpose
 
-    result = labels.withColumnRenamed("label", "cluster_id")
-    if vertices is not None:
-        singles = (
-            vertices.select(F.col(id_col).cast("long").alias(id_col))
-            .join(result, id_col, "left_anti")
-            .withColumn("cluster_id", F.col(id_col))
-        )
-        result = result.unionByName(singles)
-    return result
-
-
-def _driver_cc(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    id_col: str,
-    rows: list | None = None,
-) -> DataFrame:
-    """Small-graph path: collect edges (or take the caller's
-    already-collected ``rows``), union-find with min-root unions,
-    parallelize assignments back (non-edge vertices via left-anti join)."""
-    spark = edges.sparkSession
-    if rows is None:
-        rows = edges.select("src", "dst").collect()
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        p = parent.setdefault(x, x)
-        while p != parent[p]:
-            parent[p] = parent[parent[p]]
-            p = parent[p]
-        parent[x] = p
-        return p
-
-    for r in rows:
-        ra, rb = find(int(r.src)), find(int(r.dst))
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-
-    if parent:
-        import numpy as np
-        import pandas as pd
-
-        ks = np.fromiter(parent.keys(), dtype=np.int64, count=len(parent))
-        roots = np.array([find(int(x)) for x in ks], dtype=np.int64)
+    if rows:
+        # fromiter over the flattened Rows: np.array(rows) probes every Row
+        # as a generic sequence, hundreds of times slower
+        flat = np.fromiter(chain.from_iterable(rows), np.int64, 2 * len(rows))
+        ids, roots = union_find(flat[0::2], flat[1::2])
         # pandas → Arrow → JVM: the tuple-list path pickles rows through a
         # python-RDD scan job (~4 s per call at any size — guide §6 "Arrow
         # for driver transfers"); the Arrow path is a driver-side memcpy
         result = spark.createDataFrame(
-            pd.DataFrame({id_col: ks, "cluster_id": roots}),
+            pd.DataFrame({id_col: ids, "cluster_id": roots}),
             f"{id_col} long, cluster_id long",
         )
     else:
-        # no edges at all: every vertex is a singleton — identical to the
-        # general path below (empty ∪ (vertices ⟕̸ empty)) minus the
-        # anti-join/union plan nodes it would burn on a no-dup corpus
-        if vertices is not None:
-            return vertices.select(
-                F.col(id_col).cast("long").alias(id_col),
-                F.col(id_col).cast("long").alias("cluster_id"),
-            )
-        result = spark.createDataFrame([], f"{id_col} long, cluster_id long")
-    if vertices is not None:
-        singles = (
-            vertices.select(F.col(id_col).cast("long").alias(id_col))
-            .join(result, id_col, "left_anti")
-            .withColumn("cluster_id", F.col(id_col))
+        # an empty list or pandas frame takes that python-RDD path too;
+        # an empty range is a JVM-side empty relation the optimizer folds
+        result = spark.range(0).select(
+            F.col("id").alias(id_col), F.col("id").alias("cluster_id")
         )
-        result = result.unionByName(singles)
-    return result
-
-
-def connected_components_star(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    max_iters: int = 30,
-    checkpoint_every: int = 2,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public algorithm). Converges in O(log n) rounds even for
-    path-shaped components where plain min-label propagation needs
-    O(diameter) — the scale path for pathological web graphs (long
-    redirect/mirror chains). Output contract matches
-    :func:`connected_components`: (doc_id, cluster_id = component min).
-
-    large-star: every node's strictly-LARGER neighbors re-attach to the
-    minimum of its closed neighborhood; small-star: every node's
-    smaller-or-equal neighbors (and itself) attach to that minimum.
-    Both preserve connectivity; their fixpoint is a star per component.
-    """
-    spark = edges.sparkSession
-
-    e = (
-        edges.select(
-            F.least(F.col("src"), F.col("dst")).cast("long").alias("u"),
-            F.greatest(F.col("src"), F.col("dst")).cast("long").alias("v"),
+    for t in reversed(maps):
+        result = t.join(result.withColumnRenamed(id_col, "m"), "m", "left").select(
+            F.col("x").alias(id_col), F.coalesce("cluster_id", "m").alias("cluster_id")
         )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
-
-    def _signature(df: DataFrame):
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor: order-independent set digest without ANSI overflow;
-            # TWO independent 64-bit digests (different arg order seeds a
-            # different hash) — a false fixpoint now needs a simultaneous
-            # 128-bit collision between consecutive distinct edge sets
-            F.expr("bit_xor(xxhash64(u, v))").alias("h1"),
-            F.expr("bit_xor(xxhash64(v, u))").alias("h2"),
-        ).collect()[0]
-        return (row.n, row.h1, row.h2)
-
-    prev_sig = _signature(e)
-    converged = False
-    for it in range(max_iters):
-        # ---- large-star ----
-        sym = e.select("u", "v").unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(
-                F.least(F.col("v"), F.col("m")).alias("u"),
-                F.greatest(F.col("v"), F.col("m")).alias("v"),
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # ---- small-star (on the large-star output) ----
-        lsym = large.select(
-            F.col("v").alias("u"), F.col("u").alias("v")
-        )  # point each edge from its larger endpoint down
-        smins = lsym.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            lsym.join(smins, "u")
-            .select("u", "v", "m")
-        )
-        new_e = (
-            small.select(
-                F.least(F.col("v"), F.col("m")).alias("u"),
-                F.greatest(F.col("v"), F.col("m")).alias("v"),
-            )
-            .unionByName(small.select(
-                F.least(F.col("u"), F.col("m")).alias("u"),
-                F.greatest(F.col("u"), F.col("m")).alias("v"),
-            ))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        if (it + 1) % checkpoint_every == 0:
-            new_e = new_e.localCheckpoint(eager=True)
-        else:
-            new_e = new_e.persist()
-        sig = _signature(new_e)
-        e.unpersist()
-        e = new_e
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-
-    if not converged:
-        # label extraction below assumes the graph is a union of DISJOINT
-        # stars rooted at each component's minimum, which only holds at
-        # the fixpoint — exiting silently via max_iters would produce
-        # wrong labels. Star-shape alone (no root appears as a member) is
-        # NOT enough: a member hanging under two roots still passes it,
-        # yet its two roots belong to one component and would get
-        # different labels. Verify both properties and fail loudly; with
-        # edges canonicalized u < v, disjoint stars are automatically
-        # rooted at their component minimum.
-        non_star = (
-            e.select(F.col("u").alias("x"))
-            .join(e.select(F.col("v").alias("x")), "x", "left_semi")
-            .limit(1)
-            .count()
-        )
-        multi_root = (
-            e.groupBy("v").agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .limit(1)
-            .count()
-        )
-        if non_star or multi_root:
-            raise RuntimeError(
-                f"star CC did not converge in {max_iters} iterations "
-                "(non-star or multi-root edges remain) — raise max_iters"
-            )
-
-    # converged: every edge is (root, member) with root = component min
-    labels = e.select(
-        F.col("v").alias(id_col), F.col("u").alias("cluster_id")
-    )
-    roots = e.select(F.col("u").alias(id_col)).distinct().withColumn(
-        "cluster_id", F.col(id_col)
-    )
-    result = labels.unionByName(roots).groupBy(id_col).agg(
-        F.min("cluster_id").alias("cluster_id")
-    )
     if vertices is not None:
         singles = (
             vertices.select(F.col(id_col).cast("long").alias(id_col))

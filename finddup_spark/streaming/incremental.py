@@ -337,7 +337,11 @@ def read_state(
     if not deltas:
         return spark.createDataFrame([], STATE_SCHEMA)
     root = _delta_root(out_dir)
-    return spark.read.parquet(*[os.path.join(root, d) for d in deltas])
+    # explicit schema: the deltas are all written with STATE_SCHEMA, and
+    # without it every state read launches a parquet schema-inference job
+    return spark.read.schema(STATE_SCHEMA).parquet(
+        *[os.path.join(root, d) for d in deltas]
+    )
 
 
 def merge_batch(

@@ -12,14 +12,14 @@ from pyspark.sql import functions as F
 
 from finddup_spark.config import DEFAULT_CONFIG
 from finddup_spark.functions.signatures import compute_signatures, explode_bands
-from finddup_spark.operators.cc import connected_components
+from finddup_spark.operators.cc import connected_components, union_find
 from finddup_spark.operators.lsh import (
     bucket_histogram,
     candidate_pairs,
     simhash_candidate_pairs,
     verify_pairs,
 )
-from finddup_spark.oracle import run_oracle
+from finddup_spark.oracle import _UnionFind, run_oracle
 from finddup_spark.sources.tables import load_pages
 
 
@@ -169,62 +169,104 @@ def test_cc_handles_empty_edges(spark):
     assert (out.doc_id == out.cluster_id).all() and len(out) == 5
 
 
+def _uf_labels(pairs, vertices=()) -> dict[int, int]:
+    """doc_id -> cluster_id from the oracle's dict union-find."""
+    uf = _UnionFind()
+    for v in vertices:
+        uf.find(v)
+    for a, b in pairs:
+        uf.union(int(a), int(b))
+    return {x: uf.find(x) for x in list(uf.parent)}
+
+
+def _edges_df(spark, pairs):
+    """(src, dst) long frame via Arrow: no Python-worker scan per action."""
+    return spark.createDataFrame(pd.DataFrame(pairs, columns=["src", "dst"], dtype="int64"))
+
+
+def test_union_find_kernel_matches_oracle():
+    """The numpy kernel alone (no Spark) on a permuted 100k-id path and a
+    seeded random graph."""
+    rng = np.random.default_rng(11)
+    path = rng.permutation(100_000)
+    rand = rng.integers(0, 50_000, (2, 40_000))
+    for src, dst in [(path[:-1], path[1:]), (rand[0], rand[1])]:
+        ids, roots = union_find(src, dst)
+        assert dict(zip(ids.tolist(), roots.tolist())) == _uf_labels(zip(src, dst))
+
+
 def test_cc_chain_converges(spark):
     """Path graph 0-1-2-...-9 → single component labeled 0 — on BOTH the
-    driver union-find path and the distributed min-label loop."""
-    rows = [(i, i + 1) for i in range(9)]
-    edges = spark.createDataFrame(rows, "src long, dst long")
+    driver union-find path and the distributed contraction rounds."""
+    edges = _edges_df(spark, [(i, i + 1) for i in range(9)])
     out = connected_components(edges).toPandas()  # driver path (small)
     assert set(out.cluster_id) == {0} and len(out) == 10
     out2 = connected_components(edges, driver_threshold=0).toPandas()
     assert set(out2.cluster_id) == {0} and len(out2) == 10
+    with pytest.raises(ValueError):  # the rounds could never stop
+        connected_components(edges, driver_threshold=-1)
 
 
 def test_star_cc_matches_union_find(spark):
-    """Large-star/small-star CC (SoCC'14) must produce exactly the
-    union-find clusters — including on a PATH graph, the worst case for
-    plain min-label propagation (diameter = n)."""
+    """The distributed path (partition-local union-find + contraction)
+    must produce exactly the oracle's union-find clusters, run to the end
+    (``driver_threshold=0``) on every input. Inputs: a PATH (the worst
+    case for label propagation, diameter = n), cliques, small and large
+    random graphs, a permuted 5,000-id path and a 1,000-leaf hub. The
+    5,000-id path and the large random graph run once more with 4 shuffle
+    partitions and AQE partition coalescing off, so the rounds run at
+    P = 4, 2, ... partitions, and with a threshold between 0 and |E|, so
+    the loop stops partway (after one and two rounds) and finishes on the
+    driver."""
     import random
 
-    from finddup_spark.operators.cc import (
-        _driver_cc,
-        connected_components_star,
-    )
-
-    cases = []
-    # path 0-1-2-...-19 (single component, max diameter)
-    cases.append([(i, i + 1) for i in range(19)])
-    # two cliques + an isolated edge
-    cases.append(
-        [(a, b) for a in range(5) for b in range(a + 1, 5)]
-        + [(10 + a, 10 + b) for a in range(4) for b in range(a + 1, 4)]
-        + [(100, 101)]
-    )
     rng = random.Random(42)
-    cases.append([(rng.randrange(50), rng.randrange(50)) for _ in range(60)])
-
-    for pairs in cases:
+    perm = np.random.default_rng(5).permutation(5000).tolist()
+    cases = [
+        # path 0-1-2-...-19 (single component, max diameter)
+        ([(i, i + 1) for i in range(19)], None),
+        # two cliques + an isolated edge
+        (
+            [(a, b) for a in range(5) for b in range(a + 1, 5)]
+            + [(10 + a, 10 + b) for a in range(4) for b in range(a + 1, 4)]
+            + [(100, 101)],
+            None,
+        ),
+        ([(rng.randrange(50), rng.randrange(50)) for _ in range(60)], None),
+        (list(zip(perm[:-1], perm[1:])), 3500),
+        ([(1000, i) for i in range(1000)], None),  # hub is the largest id
+        ([(rng.randrange(3000), rng.randrange(3000)) for _ in range(2000)], 700),
+    ]
+    partitioned = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "4",
+    }
+    saved = {k: spark.conf.get(k) for k in partitioned}
+    for pairs, partway in cases:
         pairs = [(a, b) for a, b in pairs if a != b]
-        edges = spark.createDataFrame(pairs, "src long, dst long")
-        got = (
-            connected_components_star(edges)
-            .toPandas().sort_values("doc_id").reset_index(drop=True)
-        )
-        want = (
-            _driver_cc(edges, None, "doc_id")
-            .toPandas().sort_values("doc_id").reset_index(drop=True)
-        )
-        assert got.equals(want), (pairs[:5], len(pairs))
+        edges = _edges_df(spark, pairs)
+        want = _uf_labels(pairs)
+        runs = [(0, {})] + ([(partway, partitioned)] if partway else [])
+        for th, conf in runs:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            try:  # the rounds run eagerly, inside the call
+                clusters = connected_components(edges, driver_threshold=th)
+            finally:
+                for k in conf:
+                    spark.conf.set(k, saved[k])
+            out = clusters.toPandas()
+            assert len(out) == len(want), (pairs[:5], len(pairs), th)
+            got = dict(zip(out.doc_id.tolist(), out.cluster_id.tolist()))
+            assert got == want, (pairs[:5], len(pairs), th)
 
 
 def test_star_cc_singleton_vertices(spark):
-    from finddup_spark.operators.cc import connected_components_star
-
-    edges = spark.createDataFrame([(1, 2)], "src long, dst long")
-    verts = spark.createDataFrame([(1,), (2,), (7,)], "doc_id long")
-    out = connected_components_star(edges, vertices=verts).toPandas()
+    edges = _edges_df(spark, [(1, 2)])
+    verts = spark.createDataFrame(pd.DataFrame({"doc_id": [1, 2, 7]}))
+    out = connected_components(edges, vertices=verts, driver_threshold=0).toPandas()
     got = dict(zip(out.doc_id, out.cluster_id))
-    assert got == {1: 1, 2: 1, 7: 7}
+    assert got == _uf_labels([(1, 2)], vertices=[1, 2, 7]) == {1: 1, 2: 1, 7: 7}
 
 
 def test_hot_bucket_within_shard_allpairs_recall(spark):

@@ -19,6 +19,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from finddup_spark.operators.cc import connected_components
 from finddup_spark.operators.dedup import (
     cross_modal_dedup,
     embedding_lsh_dedup,
@@ -87,4 +88,43 @@ def test_dedup_job_ceiling(spark, docs, vecs, name, ceiling):
     assert used <= ceiling, (
         f"{name}_dedup launched {used} Spark jobs (ceiling {ceiling}) — "
         "an action/persist/branch-elision regression"
+    )
+
+
+#: measured steady-state jobs (the test session: local[8], 8 shuffle
+#: partitions, 2026-10): 9 — one contraction round, then the driver
+CC_CEILING = 12
+
+
+def test_distributed_cc_job_ceiling(spark):
+    """The distributed CC path above ``driver_threshold``: each
+    contraction round is planned from the last round's checkpoint, so a
+    call costs a fixed handful of jobs. A regression to re-planning a
+    deepening self-joined plan per round (large-star/small-star took
+    25-41 jobs on a graph like this one) blows the ceiling."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    pairs = []
+    for base in (0, 100):  # two permuted 8-id paths
+        ids = base + rng.permutation(8)
+        pairs += list(zip(ids[:-1], ids[1:]))
+    pairs += list(zip(*(200 + rng.permutation(40).reshape(2, 20))))  # a matching
+    pairs += [(300, 300 + i) for i in range(1, 21)]  # a 20-leaf hub
+    edges = spark.createDataFrame(
+        [(int(a), int(b)) for a, b in pairs], "src long, dst long"
+    ).cache()
+
+    def run():
+        return len(connected_components(
+            edges, driver_threshold=len(pairs) // 2).toPandas())
+
+    run()  # warm — the budget is steady-state
+    j0 = _jobs(spark)
+    n = run()
+    used = _jobs(spark) - j0
+    assert n == 16 + 40 + 21
+    assert used <= CC_CEILING, (
+        f"distributed connected_components launched {used} Spark jobs "
+        f"(ceiling {CC_CEILING}) — a per-round plan regression"
     )
